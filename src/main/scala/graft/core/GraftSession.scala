@@ -53,6 +53,25 @@ object GraftSession {
       // sane choice at production state sizes.
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      // Changelog checkpointing: a commit writes one changelog file of the
+      // batch's puts and deletes per store instead of flushing the
+      // memtables and uploading a snapshot. Commits were the streaming
+      // cost: in a traced run of the benchmark's stream_state workload
+      // (4 cores), state commits took 62 s of 82 s executor task time
+      // against 3 s of task CPU. Durability is unchanged: the changelog is
+      // in the checkpoint before the batch commits, and recovery replays
+      // the changelogs on top of the latest snapshot, which is taken every
+      // `minDeltasForSnapshot` versions and uploaded by the maintenance
+      // thread.
+      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+      // Stream-stream joins keep their four state tables (key → count and
+      // key-with-index → value, per side) as virtual column families of ONE
+      // store per partition instead of four stores, so a join micro-batch
+      // pays one store commit per shuffle partition, not four. Format 3
+      // exists only for the RocksDB provider above, and it binds per query
+      // at its first start (a checkpoint keeps the format it was written
+      // with).
+      .config("spark.sql.streaming.join.stateFormatVersion", "3")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.sql.session.timeZone", "UTC")

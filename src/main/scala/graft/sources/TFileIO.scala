@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.io.file.tfile.TFile
+import org.apache.hadoop.io.file.tfile.{Compression, TFile}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -23,6 +23,22 @@ object TFileIO {
   private def keyBytes(k: Long): Array[Byte] =
     java.nio.ByteBuffer.allocate(8).putLong(k).array()
 
+  /** Hadoop's `Compression.Algorithm.GZ.getCodec` is unsynchronized: it
+    * publishes the JVM-wide codec BEFORE calling `setConf` on it, so a
+    * second writer or reader starting at the same moment can take the
+    * codec with a null conf and fail with an NPE in
+    * `Configuration.setInt`. Parallel part-file tasks hit that on the
+    * first TFile use in a JVM. The lazy val builds the codec once, under
+    * its initialization lock, before any TFile writer or reader is made.
+    */
+  private lazy val gzCodec: Compression.Algorithm = {
+    val gz = Compression.Algorithm.GZ
+    gz.returnCompressor(gz.getCompressor())
+    gz
+  }
+
+  private def initGzCodec(): Unit = { val _ = gzCodec }
+
   /** Write (long key, string value) rows as `partitions` sorted gzip TFiles
     * under `path`, key ranges disjoint across part files.
     */
@@ -35,16 +51,21 @@ object TFileIO {
       .repartitionByRange(partitions, col("key")).sortWithinPartitions("key")
       .rdd.map(r => (r.getLong(0), r.getString(1)))
       .mapPartitionsWithIndex { (idx, it) =>
-        val conf = new Configuration()
-        val part = new Path(path, f"part-$idx%05d")
-        val out = part.getFileSystem(conf).create(part)
-        val w = new TFile.Writer(out, BlockSize, TFile.COMPRESSION_GZ,
-          TFile.COMPARATOR_MEMCMP, conf)
-        try it.foreach { case (k, v) =>
-          w.append(keyBytes(k), v.getBytes("UTF-8"))
-        } finally { w.close(); out.close() }
+        writePart(new Path(path, f"part-$idx%05d"), it)
         Iterator.single(idx)
       }.count(): Unit
+  }
+
+  /** One sorted gzip part TFile of (key, value) rows, keys ascending. */
+  private[sources] def writePart(part: Path, rows: Iterator[(Long, String)]): Unit = {
+    initGzCodec()
+    val conf = new Configuration()
+    val out = part.getFileSystem(conf).create(part)
+    val w = new TFile.Writer(out, BlockSize, TFile.COMPRESSION_GZ,
+      TFile.COMPARATOR_MEMCMP, conf)
+    try rows.foreach { case (k, v) =>
+      w.append(keyBytes(k), v.getBytes("UTF-8"))
+    } finally { w.close(); out.close() }
   }
 
   /** Distributed scan: one task per part TFile. */
@@ -60,6 +81,7 @@ object TFileIO {
   }
 
   private def readPart(part: String): Iterator[(Long, String)] = {
+    initGzCodec()
     val conf = new Configuration()
     val p = new Path(part)
     val fs = p.getFileSystem(conf)
@@ -85,6 +107,7 @@ object TFileIO {
     * range covers the key; part ranges are disjoint so at most one hits.
     */
   def get(spark: SparkSession, path: String, keys: Seq[Long]): Seq[(Long, String)] = {
+    initGzCodec()
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(path)
     val fs = root.getFileSystem(conf)

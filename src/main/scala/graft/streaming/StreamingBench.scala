@@ -44,13 +44,19 @@ object StreamingBench {
     * −1: one transient stall must not invalidate a whole round's band.
     */
   def run(spark: SparkSession): Seq[(String, String)] = {
-    // attest WHICH provider the un-suffixed probes ran under: round 14
-    // flipped the session default to RocksDB (GraftSession), so the
-    // artifact must say so — a future provider change shows up here
-    // instead of masquerading as a throughput delta
-    val provider = spark.conf
-      .getOption("spark.sql.streaming.stateStore.providerClass")
-      .map(_.split('.').last).getOrElse("HDFSBackedStateStoreProvider")
+    // attest the state-store commit path every probe ran under, read back
+    // from the session conf (Spark's defaults when unset): a later change
+    // of provider or commit mode shows up here instead of masquerading as
+    // a throughput delta
+    def conf(key: String, default: String): String =
+      spark.conf.getOption(key).getOrElse(default)
+    val stateStore = Seq(
+      "provider" -> ("\"" + conf("spark.sql.streaming.stateStore.providerClass",
+        "HDFSBackedStateStoreProvider").split('.').last + "\""),
+      "changelog_checkpointing" -> conf(
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "false"),
+      "join_state_format" -> conf("spark.sql.streaming.join.stateFormatVersion", "2"))
+      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     def band2(name: String, warm: Boolean = false, attempts: Int = 2)(attempt: => (Double, String)): Seq[(String, String)] = {
       // per-attempt cause record (round-11 verdict task 1): every timed
       // attempt — including the dropped worst — lands in
@@ -106,7 +112,7 @@ object StreamingBench {
     // local band at ~1.05 — whatever hits early attempts in the driver
     // environment gets one untimed attempt to land on, and the dropped
     // worst is disclosed under _drop with its cause fields in _attempts
-    Seq("state_store_provider" -> ("\"" + provider + "\"")) ++
+    Seq("state_store" -> stateStore) ++
     band2("windowed_agg_rows_per_sec", warm = true, attempts = 3)(
       measure(spark, batches = 6) { s =>
       val src = rateSource(s, rowsPerBatch = 2000000L)
@@ -150,54 +156,7 @@ object StreamingBench {
               " theta iota kappa lambda", col("value") % 200000L).as("text"),
             col("timestamp").as("ts"))
         StreamingOps.ingestPackStream(src, "ts", "10 seconds").toDF()
-      }) ++
-    // RocksDB state-store A/B (round-12 verdict task 5): the r12 cause
-    // fields adjudicated the wide driver bands on the two state-heaviest
-    // probes as state-store load (state_ms 146-240 s on slow attempts vs
-    // 46-74 s on good ones) — the default HDFS-backed provider keeps every
-    // version of every key on the JVM heap, where suite-long retained sets
-    // and GC pressure hit exactly the commit path state_ms measures.
-    // RocksDB moves state off-heap with its own write buffer; these rows
-    // re-run the SAME two probes under the RocksDB provider so the A/B is
-    // attested IN the artifact (same rate source, same batches, same
-    // per-attempt cause fields). Session conf is set per-probe and
-    // restored after — streaming queries bind the provider at start, so
-    // the surrounding probes are unaffected.
-    withRocksDb(spark)(
-      band2("stream_stream_join_rocksdb_rows_per_sec")(
-        measure(spark, batches = 6) { s =>
-          val l = rateSource(s, rowsPerBatch = 250000L)
-            .select(col("value").as("k"), col("timestamp").as("lts"))
-          val r = rateSource(s, rowsPerBatch = 250000L)
-            .select(col("value").as("k"), col("timestamp").as("rts"),
-              (col("value") % 1000).as("payload"))
-          StreamingOps.streamJoin(l, r, "k", "lts", "rts",
-            watermark = "2 seconds", bandSeconds = 1)
-        }) ++
-      band2("keyed_sketch_rocksdb_rows_per_sec", warm = true, attempts = 3)(
-        measure(spark, batches = 6, outputMode = "update") { s =>
-          import s.implicits._
-          val src = rateSource(s, rowsPerBatch = 1000000L)
-            .select((col("value") % 64).cast("string").as("source"),
-              (col("value") % 100000).cast("string").as("word"))
-            .as[StreamingOps.KmvEv]
-          StreamingOps.distinctStream(src, k = 64).toDF()
-        }))
-  }
-
-  private val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-
-  private def withRocksDb(spark: SparkSession)(
-      body: => Seq[(String, String)]): Seq[(String, String)] = {
-    val prev = spark.conf.getOption(ProviderKey)
-    spark.conf.set(ProviderKey, RocksDbProvider)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(ProviderKey, v)
-      case None => spark.conf.unset(ProviderKey)
-    }
+      })
   }
 
   private def rateSource(spark: SparkSession, rowsPerBatch: Long): DataFrame =

@@ -135,7 +135,10 @@ object StreamingOps {
     * its watermark horizon, and the time-range condition lets Spark evict
     * both states — the enrich-clicks-with-impressions shape. Equi-key plus
     * a bounded event-time band; unbounded-state joins are rejected by
-    * construction.
+    * construction. Under the session's join state format 3
+    * ([[graft.core.GraftSession]]) both sides' buffers live in ONE RocksDB
+    * store per shuffle partition, so a micro-batch commits one store per
+    * partition, not four.
     */
   def streamJoin(left: DataFrame, right: DataFrame, key: String,
                  leftTs: String, rightTs: String, watermark: String,

@@ -1,5 +1,9 @@
 package graft.sources
 
+import java.lang.reflect.InvocationTargetException
+import java.util.concurrent.{Callable, CyclicBarrier, Executors}
+
+import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.SequenceFile.CompressionType
 import org.apache.spark.sql.functions._
 
@@ -46,6 +50,40 @@ class CompressionSpec extends SparkSpec {
     assert(TFileIO.get(spark, dir, Seq(4L, 5000L)).isEmpty)
   }
 
+  test("TFile: parallel first writers in a JVM never see a half-built gzip codec") {
+    // Hadoop's TFile gzip codec is a static built on first use, without a
+    // lock. A fresh class loader per round re-runs that first use: each
+    // round defines the TFile classes and TFileIO anew and starts four
+    // part-file writers at once. Without TFileIO's lock about one round in
+    // a hundred fails with an NPE, so 250 rounds catch it nine times in ten.
+    val dir = java.nio.file.Files.createTempDirectory("graft-tfile-race-")
+    val writers = 4
+    val pool = Executors.newFixedThreadPool(writers)
+    val failures =
+      try (0 until 250).flatMap { round =>
+        val loader = new CompressionSpec.ChildFirstLoader(getClass.getClassLoader,
+          Seq("org.apache.hadoop.io.file.tfile.", "graft.sources.TFileIO"))
+        val io = loader.loadClass("graft.sources.TFileIO$").getField("MODULE$").get(null)
+        val writePart = io.getClass.getMethod("writePart",
+          classOf[Path], classOf[Iterator[_]])
+        val barrier = new CyclicBarrier(writers)
+        (0 until writers).map { t =>
+          pool.submit(new Callable[Option[Throwable]] {
+            def call(): Option[Throwable] = {
+              barrier.await()
+              try {
+                writePart.invoke(io, new Path(dir.resolve(s"r$round-w$t").toString),
+                  Iterator((1L, "v")))
+                None
+              } catch { case e: InvocationTargetException => Some(e.getCause) }
+            }
+          })
+        }.flatMap(_.get())
+      } finally pool.shutdown()
+    assert(failures.isEmpty,
+      s"${failures.size} writers failed, first: ${failures.headOption}")
+  }
+
   test("BZip2-codec SequenceFile (reference BZip2Codec) round-trips losslessly") {
     val dir = tmp("sfbz2") + "/sf"
     val rows = (1L to 200L).map(k => (k, s"bz-$k-" + ("z" * 30)))
@@ -87,5 +125,24 @@ class CompressionSpec extends SparkSpec {
       spark.conf.set("spark.sql.files.maxPartitionBytes", (16 * 1024).toString)
       assert(spark.read.text(dir).rdd.getNumPartitions == 1)
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+  }
+}
+
+object CompressionSpec {
+  /** Defines the classes under `prefixes` itself, from the parent's class
+    * files, and delegates every other class to the parent: each instance
+    * holds its own copy of those classes' static state.
+    */
+  final class ChildFirstLoader(parent: ClassLoader, prefixes: Seq[String])
+      extends ClassLoader(parent) {
+    override def loadClass(name: String, resolve: Boolean): Class[_] =
+      if (!prefixes.exists(name.startsWith)) super.loadClass(name, resolve)
+      else getClassLoadingLock(name).synchronized {
+        Option(findLoadedClass(name)).getOrElse {
+          val in = parent.getResourceAsStream(name.replace('.', '/') + ".class")
+          val bytes = try in.readAllBytes() finally in.close()
+          defineClass(name, bytes, 0, bytes.length)
+        }
+      }
   }
 }

@@ -3,6 +3,8 @@ package graft.streaming
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -25,11 +27,10 @@ class StreamingOpsSpec extends SparkSpec with BeforeAndAfterAll {
     dir.toString
   }
 
+  // quietly: the state-store maintenance thread may still be uploading a
+  // snapshot into a just-stopped query's checkpoint
   override def afterAll(): Unit = {
-    checkpoints.foreach { p =>
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.deleteIfExists(f))
-    }
+    checkpoints.foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(p.toFile): Unit)
     super.afterAll()
   }
 
@@ -188,6 +189,49 @@ class StreamingOpsSpec extends SparkSpec with BeforeAndAfterAll {
       val got = spark.table(sink).collect().map(r => (r.getString(0), r.getDouble(1)))
       assert(got.toSeq == Seq(("u1", 1.5)))
     } finally q.stop()
+  }
+
+  test("state commits: one store per join partition, a changelog per commit") {
+    // GraftSession's commit path: the stream-stream join keeps its four
+    // state tables in ONE RocksDB store per shuffle partition (join state
+    // format 3, not four stores), and a commit writes a changelog file
+    // rather than a full snapshot (changelog checkpointing)
+    implicit val sqlCtx = spark.sqlContext
+    val imps = MemoryStream[(Timestamp, Long)]
+    val clicks = MemoryStream[(Timestamp, Long)]
+    val join = StreamingOps.streamJoin(
+      imps.toDF().toDF("imp_ts", "ad_id"), clicks.toDF().toDF("click_ts", "ad_id"),
+      "ad_id", "imp_ts", "click_ts", "30 seconds", bandSeconds = 60)
+      .writeStream.format("noop").outputMode("append")
+      .option("checkpointLocation", freshCheckpoint("shape-join"))
+      .start()
+    try {
+      imps.addData((ts(100), 7L), (ts(101), 8L))
+      clicks.addData((ts(130), 7L))
+      join.processAllAvailable()
+      val stores = join.recentProgress.filter(_.numInputRows > 0)
+        .flatMap(_.stateOperators.map(_.numStateStoreInstances)).toSeq
+      val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      assert(stores.nonEmpty && stores.forall(_ == partitions),
+        s"store instances per join micro-batch: $stores, partitions $partitions")
+    } finally join.stop()
+
+    val in = MemoryStream[(Timestamp, String, Double)]
+    val ckpt = freshCheckpoint("shape-win")
+    val win = StreamingOps.windowedAgg(in.toDF().toDF("ts", "event_type", "value"),
+        "ts", "10 seconds", "5 seconds")
+      .writeStream.format("noop").outputMode("append")
+      .option("checkpointLocation", ckpt)
+      .start()
+    try {
+      in.addData((ts(1), "view", 1.0))
+      win.processAllAvailable()
+      in.addData((ts(12), "view", 2.0))
+      win.processAllAvailable()
+    } finally win.stop()
+    val changelogs = Files.walk(java.nio.file.Paths.get(ckpt, "state")).iterator()
+      .asScala.map(_.getFileName.toString).filter(_.endsWith(".changelog")).toSeq
+    assert(changelogs.nonEmpty, "a windowed aggregate commit must write a changelog")
   }
 
   test("outer stream-stream join: unmatched rows emit null only after the watermark closes the band") {
