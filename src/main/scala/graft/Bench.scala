@@ -2,11 +2,17 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
+import scala.collection.mutable
+import scala.util.control.NonFatal
 
-import graft.core.GraftSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.sum
 
-/** Benchmark main: times each headline query on SPARK_GRAFT_SF_DIR and
+import graft.Measure.fixed
+import graft.core.{Shared, TaskMetricsProbe}
+
+/** Benchmark main: times each catalog query on SPARK_GRAFT_SF_DIR and
   * writes the full per-query JSON to target/bench.json, then prints it,
   * then prints a SHORT summary JSON line LAST. The driver captures only a
   * tail of stdout, and the ~3.5 KB full line outran that window in round 3
@@ -14,11 +20,8 @@ import graft.core.GraftSession
   * gridmix, errors, no per-query map) is always the final line so the
   * driver can parse it regardless of tail size.
   *
-  * Materialization is a noop-format write, not count(): count() lets
-  * Catalyst prune unreferenced expressions, so projection/window-shaped
-  * queries (field_selection, secondary_sort) would degrade to parquet
-  * count-stars and measure nothing. The noop sink consumes every row and
-  * column while writing no bytes.
+  * Every timed run is a [[Measure.noop]] write, which consumes every row
+  * and column (count() would let Catalyst prune them).
   *
   * Each query runs twice; the reported time is the min over successful
   * attempts (steady-state, post-JIT) and "queries_max" carries the max so
@@ -28,6 +31,8 @@ import graft.core.GraftSession
   *
   * A query that throws on every attempt is reported with -1.0 and listed in
   * "errors" — a crashing query must be distinguishable from a fast success.
+  * A harness step that throws (a warm-up, the calibration, a plan capture)
+  * is printed to stderr and listed in "harness_errors".
   *
   * The "gridmix" object labels the reference benchmark suite's six job
   * shapes (reference: src/benchmarks/gridmix2/.../GridMixRunner.java:105-287)
@@ -79,8 +84,24 @@ object Bench {
   )
 
   private case class Timing(name: String, min: Double, max: Double, ok: Boolean,
-                            attempts: Seq[String] = Nil,
+                            attempts: Seq[ListMap[String, Any]] = Nil,
                             builds: Seq[String] = Nil)
+
+  /** The harness steps that failed, in order: each is printed to stderr
+    * with its step name and listed under `harness_errors`.
+    */
+  private final class HarnessErrors {
+    val all = mutable.Buffer.empty[ListMap[String, String]]
+
+    /** `body`'s value, or None after recording its failure as `step`. */
+    def guard[A](step: String)(body: => A): Option[A] =
+      try Some(body) catch {
+        case NonFatal(e) =>
+          System.err.println(s"[bench] $step failed: $e")
+          all += ListMap("step" -> step, "error" -> e.toString)
+          None
+      }
+  }
 
   /** Two attempts, timed independently; min/max over the successful ones.
     * One success is a valid measurement even if the other attempt throws.
@@ -104,9 +125,10 @@ object Bench {
     */
   private def time2(spark: SparkSession, dir: String,
                     name: String,
-                    fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+                    fn: (SparkSession, String) => DataFrame,
+                    errs: HarnessErrors,
                     capturePlan: Boolean = false,
-                    probe: Option[graft.core.TaskMetricsProbe] = None): Timing = {
+                    probe: Option[TaskMetricsProbe] = None): Timing = {
     // Quiesce before measuring: collect the PREVIOUS query's garbage outside
     // the timed window. Root-caused in round 4: the r3 bench showed a
     // contiguous run-order window (pentomino → salted_join) inflated 3-6×
@@ -115,72 +137,66 @@ object Bench {
     // into the measurements that followed it. An explicit collection pins
     // each query's number to its own work.
     System.gc()
-    val attemptJsons = scala.collection.mutable.Buffer.empty[String]
-    val paidBuilds = scala.collection.mutable.Buffer.empty[String]
+    val attemptRecords = mutable.Buffer.empty[ListMap[String, Any]]
+    val paidBuilds = mutable.Buffer.empty[String]
     def once(): Double = {
-      import graft.core.TaskMetricsProbe
       val s0 = probe.map(_.snap())
       val g0 = TaskMetricsProbe.jvmGcMs
-      val t0 = System.nanoTime()
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
+      val sec = Measure.noop(fn(spark, dir))
       probe.foreach { p =>
         TaskMetricsProbe.drain(spark.sparkContext)
         val d = p.snap() - s0.get
         val gc = TaskMetricsProbe.jvmGcMs - g0
-        val b = graft.core.Shared.drainBuilds()
+        val b = Shared.drainBuilds()
         paidBuilds ++= b
-        val bJson = b.map("\"" + _ + "\"").mkString("[", ",", "]")
-        attemptJsons += f"""{"sec":$sec%.3f,"gc_ms":$gc,"gc_pct":${100.0 * gc / math.max(1.0, sec * 1000)}%.1f,"task_gc_ms":${d.gcMs},"spill_mb":${d.spillBytes >> 20},"shuf_w_mb":${d.shufWriteBytes >> 20},"shuf_r_mb":${d.shufReadBytes >> 20},"task_ms":${d.runMs},"tasks":${d.tasks},"builds":$bJson}"""
+        attemptRecords += ListMap("sec" -> fixed(sec), "gc_ms" -> gc,
+          "gc_pct" -> fixed(100.0 * gc / math.max(1.0, sec * 1000), 1),
+          "task_gc_ms" -> d.gcMs, "spill_mb" -> (d.spillBytes >> 20),
+          "shuf_w_mb" -> (d.shufWriteBytes >> 20),
+          "shuf_r_mb" -> (d.shufReadBytes >> 20), "task_ms" -> d.runMs,
+          "tasks" -> d.tasks, "builds" -> b)
       }
       sec
     }
     val attempts = Seq.fill(2)(
       try Right(once()) catch {
         case e: Throwable =>
-          if (probe.isDefined) attemptJsons += "{\"sec\":-1.0,\"error\":true}"
+          if (probe.isDefined)
+            attemptRecords += ListMap("sec" -> fixed(-1.0), "error" -> true)
           Left(e)
       })
-    if (capturePlan) {
-      try {
-        val qe = fn(spark, dir).queryExecution
-        // execute through the df's OWN QueryExecution (df.write would plan a
-        // separate one) so the captured AdaptiveSparkPlan is isFinalPlan=true
-        qe.toRdd.foreachPartition((_: Iterator[_]) => ())
-        Files.createDirectories(Paths.get("target/plans"))
-        Files.writeString(Paths.get(s"target/plans/$name.txt"),
-          qe.explainString(org.apache.spark.sql.execution.FormattedMode))
-      } catch { case _: Throwable => () }
+    if (capturePlan) errs.guard(s"plan capture $name") {
+      val qe = fn(spark, dir).queryExecution
+      // execute through the df's OWN QueryExecution (df.write would plan a
+      // separate one) so the captured AdaptiveSparkPlan is isFinalPlan=true
+      qe.toRdd.foreachPartition((_: Iterator[_]) => ())
+      Files.createDirectories(Paths.get("target/plans"))
+      Files.writeString(Paths.get(s"target/plans/$name.txt"),
+        qe.explainString(org.apache.spark.sql.execution.FormattedMode))
     }
     attempts.collect { case Right(s) => s } match {
       case ok if ok.nonEmpty =>
         Timing(name, ok.min, ok.max, ok = true,
-          attempts = attemptJsons.toSeq, builds = paidBuilds.toSeq)
+          attempts = attemptRecords.toSeq, builds = paidBuilds.toSeq)
       case _ =>
         val e = attempts.collectFirst { case Left(t) => t }.get
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         Timing(name, -1.0, -1.0, ok = false,
-          attempts = attemptJsons.toSeq, builds = paidBuilds.toSeq)
+          attempts = attemptRecords.toSeq, builds = paidBuilds.toSeq)
     }
   }
 
-  private def secs(v: Double): String = f"$v%.3f"
-
-  private def jsonMap(entries: Seq[(String, String)]): String =
-    entries.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.builder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Measure.cpus()
+    val spark = Measure.session()
+    val errs = new HarnessErrors
     // iterative operators dump each round's executed plan alongside the
     // query-level captures, so plandigest sees loop bodies too
     spark.conf.set(graft.core.PlanTrace.DirKey, "target/plans")
     // JVM/codegen warmup on the smallest corpus so measured times reflect
     // steady-state execution, not first-query classloading.
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    errs.guard("warm-up")(Measure.noop(SparkEntry.entry(spark)))
     // Fixed-work calibration kernels (round-11 verdict task 2; SPLIT in
     // round 13 per the r12 verdict task 7): the work is data-free and
     // identical every round, so the calibration numbers track the
@@ -201,36 +217,26 @@ object Bench {
     // Min of 3 after one untimed warm attempt each, mirroring the
     // per-query protocol.
     val calScanDir = "target/calib-scan"
-    def calCpuOnce(): Double = {
-      val t0 = System.nanoTime()
+    def calCpuOnce(): Double = Measure.noop(
       spark.range(0, 1L << 31, 1, cpus)
         .selectExpr("xxhash64(id) AS h")
         // bit_xor, not sum: 2³¹ hash values overflow a long under ANSI
-        .selectExpr("bit_xor(h) AS s")
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def calIoOnce(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0, 1L << 24, 1, cpus)
+        .selectExpr("bit_xor(h) AS s"))
+    def calIoOnce(): Double =
+      Measure.noop(spark.range(0, 1L << 24, 1, cpus)
         .selectExpr("id % 1024 AS k", "id")
-        .groupBy("k").agg(org.apache.spark.sql.functions.sum("id"))
-        .write.format("noop").mode("overwrite").save()
-      spark.read.parquet(calScanDir)
+        .groupBy("k").agg(sum("id"))) +
+      Measure.noop(spark.read.parquet(calScanDir)
         .where("pmod(h, 7) = 0")
-        .groupBy("s").agg(org.apache.spark.sql.functions.sum("id"))
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val (calibrationCpuSec, calibrationIoSec) =
-      try {
-        spark.range(0, 1L << 23, 1, cpus)
-          .selectExpr("id", "xxhash64(id) AS h",
-            "cast(id % 997 AS string) AS s")
-          .write.mode("overwrite").parquet(calScanDir)
-        calCpuOnce(); calIoOnce()
-        (Seq.fill(3)(calCpuOnce()).min, Seq.fill(3)(calIoOnce()).min)
-      } catch { case _: Throwable => (-1.0, -1.0) }
+        .groupBy("s").agg(sum("id")))
+    val (calibrationCpuSec, calibrationIoSec) = errs.guard("calibration") {
+      spark.range(0, 1L << 23, 1, cpus)
+        .selectExpr("id", "xxhash64(id) AS h",
+          "cast(id % 997 AS string) AS s")
+        .write.mode("overwrite").parquet(calScanDir)
+      calCpuOnce(); calIoOnce()
+      (Seq.fill(3)(calCpuOnce()).min, Seq.fill(3)(calIoOnce()).min)
+    }.getOrElse((-1.0, -1.0))
     val calibrationSec =
       if (calibrationCpuSec < 0 || calibrationIoSec < 0) -1.0
       else calibrationCpuSec + calibrationIoSec
@@ -244,8 +250,8 @@ object Bench {
     // enough to flush its compiled kernel out of the JIT code cache (build
     // also raises ReservedCodeCacheSize). The durable fix: warm IMMEDIATELY
     // before the timed attempts, per query, where nothing can evict it.
-    try graft.operators.DistributedSearch.warmPentKernel()
-    catch { case _: Throwable => () }
+    errs.guard("pentomino kernel warm-up")(
+      graft.operators.DistributedSearch.warmPentKernel())
     // bfs_hops: its dominant cold cost is the memoized co-purchase edge
     // build ([[graft.catalog.Algorithms.bfsHops]]) — warming populates the
     // Shared memo so BOTH timed attempts measure the traversal, and the
@@ -295,35 +301,33 @@ object Bench {
     // per-query shared-frame builds (label list): a memoized consumer's
     // first attempt pays the build, so its max/min spread is explained
     // here rather than read as variance
-    val sharedBuilds = scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
-    val probe = new graft.core.TaskMetricsProbe
+    val sharedBuilds = mutable.LinkedHashMap.empty[String, Seq[String]]
+    val probe = new TaskMetricsProbe
     spark.sparkContext.addSparkListener(probe)
-    val results = SparkEntry.headlines.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       if (warmFirst(name)) {
         // two untimed runs: the first triggers C2 compilation of the
         // task-side kernel, the second runs mostly compiled and finishes
         // the ramp; a GC sweep keeps the suite's accumulated garbage from
         // billing its pause to this query's timed attempts
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        } catch { case _: Throwable => () }
+        errs.guard(s"warm_first $name") {
+          Measure.noop(fn(spark, sfDir))
+          Measure.noop(fn(spark, sfDir))
+        }
         System.gc()
       }
-      graft.core.Shared.drainBuilds() // discard builds from warmups/neighbors
+      Shared.drainBuilds() // discard builds from warmups/neighbors
       // headline-tier queries get per-attempt cause fields (the artifact
       // that adjudicates a driver-vs-local band); the long tail of
       // sub-second queries stays record-free to bound artifact size
-      val t = time2(spark, sfDir, name, fn, capturePlan = true,
+      val t = time2(spark, sfDir, name, fn, errs, capturePlan = true,
         probe = if (HeadlineTier(name)) Some(probe) else None)
-      val built = t.builds ++ graft.core.Shared.drainBuilds()
+      val built = t.builds ++ Shared.drainBuilds()
       if (built.nonEmpty) sharedBuilds(name) = built
       t
     }
     val timed = results.map(t => t.name -> t.min).toMap
-    val qs = jsonMap(results.map(t => t.name -> secs(t.min)))
-    val qsMax = jsonMap(results.map(t => t.name -> secs(t.max)))
-    val errors = results.filterNot(_.ok).map("\"" + _.name + "\"").mkString("[", ",", "]")
+    val errors = results.filterNot(_.ok).map(_.name)
     val total = results.filter(_.ok).map(_.min).sum
     val headline = results.filter(r => r.ok && HeadlineTier(r.name))
     val headlineTotal = headline.map(_.min).sum
@@ -334,36 +338,33 @@ object Bench {
       "small" -> "/root/testdata/sf0.001",
       "medium" -> "/root/testdata/sf0.01",
     )
-    val tierJsons = tierDirs.flatMap { case (tier, dir) =>
+    val tiers = tierDirs.flatMap { case (tier, dir) =>
       if (!Files.isDirectory(Paths.get(dir))) None
       else {
         val ts = GridmixScenarios.map { case (scenario, q) =>
-          scenario -> time2(spark, dir, q, SparkEntry.headlines(q))
+          scenario -> time2(spark, dir, q, SparkEntry.queries(q), errs)
         }
         val tierTotal = ts.map(_._2).filter(_.ok).map(_.min).sum
         // min AND max per shape (queries/queries_max convention): a tier
         // shape whose two attempts disagree is visible without a re-run
-        Some(tier -> jsonMap(
-          ts.map { case (s, t) => s -> secs(t.min) } :+
-            ("total" -> secs(tierTotal)) :+
-            ("max" -> jsonMap(ts.map { case (s, t) => s -> secs(t.max) }))))
+        Some(tier -> ListMap(
+          ts.map { case (s, t) => s -> fixed(t.min) } :+
+            ("total" -> fixed(tierTotal)) :+
+            ("max" -> ListMap(ts.map { case (s, t) => s -> fixed(t.max) }: _*)): _*))
       }
     }
     val largeEntries = GridmixScenarios.map { case (scenario, q) =>
-      scenario -> secs(timed.getOrElse(q, -1.0))
+      scenario -> fixed(timed.getOrElse(q, -1.0))
     }
     val gmTotal = GridmixScenarios
       .flatMap { case (_, q) => timed.get(q) }.filter(_ >= 0).sum
-    val largeJson = jsonMap(largeEntries :+ ("total" -> secs(gmTotal)))
-    val tiersJson = jsonMap(tierJsons :+ ("large" -> largeJson))
+    val large = ListMap(largeEntries :+ ("total" -> fixed(gmTotal)): _*)
     // top level keeps the large-tier shapes for round-over-round continuity
-    val gridmix = jsonMap(
-      largeEntries ++ Seq("total" -> secs(gmTotal), "tiers" -> tiersJson))
+    val gridmix = ListMap(largeEntries ++ Seq("total" -> fixed(gmTotal),
+      "tiers" -> ListMap(tiers :+ ("large" -> large): _*)): _*)
 
     // streaming throughput probes (after the timed batch queries so their
     // load cannot bleed into the per-query numbers)
-    // values arrive pre-formatted (numbers, or quoted failure-cause
-    // strings) so a failed attempt's WHY lands in the artifact
     //
     // the batch catalog leaves persisted Shared memos + cached layouts on
     // the heap; at the driver's sf0.1 that retained set is ~10× the local
@@ -371,47 +372,56 @@ object Bench {
     // the r10 keyed-sketch attempt band (2.06 driver vs 1.04 local on the
     // SAME fixed-rate probe). The probes measure the streaming engine, not
     // the batch suite's leftovers — drop them first.
-    graft.core.Shared.clear()
+    Shared.clear()
     spark.catalog.clearCache()
     System.gc()
-    val streamingJson = jsonMap(graft.streaming.StreamingBench.run(spark))
+    val streaming = ListMap(graft.streaming.StreamingBench.run(spark): _*)
 
-    // disclose which queries got the per-query warm-first conditioning
-    // (untimed runs + GC immediately before their timed attempts) so
-    // cross-query and round-over-round comparisons can account for the
-    // asymmetric protocol
-    val warmFirstJson =
-      warmFirst.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val sharedBuildsJson = jsonMap(sharedBuilds.toSeq.map { case (q, ls) =>
-      q -> ls.map("\"" + _ + "\"").mkString("[", ",", "]")
-    })
-    // per-attempt cause records for the headline tier: each timed attempt's
-    // seconds + GC/spill/shuffle deltas + the shared builds it paid
-    val attemptsJson = jsonMap(results.filter(_.attempts.nonEmpty).map(t =>
-      t.name -> t.attempts.mkString("[", ",", "]")))
-    val line =
-      s"""{"metric":"total","value":${secs(total)},"unit":"sec","calibration_sec":${secs(calibrationSec)},"calibration_cpu_sec":${secs(calibrationCpuSec)},"calibration_io_sec":${secs(calibrationIoSec)},"headline_total":${secs(headlineTotal)},"headline_n":${headline.size},"queries":$qs,"queries_max":$qsMax,"queries_attempts":$attemptsJson,"warm_first":$warmFirstJson,"shared_builds":$sharedBuildsJson,"gridmix":$gridmix,"streaming":$streamingJson,"errors":$errors,"sf":"$sfDir"}"""
+    val line = Measure.json(ListMap(
+      "metric" -> "total", "value" -> fixed(total), "unit" -> "sec",
+      "calibration_sec" -> fixed(calibrationSec),
+      "calibration_cpu_sec" -> fixed(calibrationCpuSec),
+      "calibration_io_sec" -> fixed(calibrationIoSec),
+      "headline_total" -> fixed(headlineTotal), "headline_n" -> headline.size,
+      "queries" -> ListMap(results.map(t => t.name -> fixed(t.min)): _*),
+      "queries_max" -> ListMap(results.map(t => t.name -> fixed(t.max)): _*),
+      // per-attempt cause records for the headline tier: each timed
+      // attempt's seconds + GC/spill/shuffle deltas + the shared builds it
+      // paid
+      "queries_attempts" -> ListMap(results.filter(_.attempts.nonEmpty)
+        .map(t => t.name -> t.attempts): _*),
+      // disclose which queries got the per-query warm-first conditioning
+      // (untimed runs + GC immediately before their timed attempts) so
+      // cross-query and round-over-round comparisons can account for the
+      // asymmetric protocol
+      "warm_first" -> warmFirst.toSeq.sorted,
+      "shared_builds" -> sharedBuilds,
+      "gridmix" -> gridmix,
+      "streaming" -> streaming,
+      "errors" -> errors,
+      "harness_errors" -> errs.all,
+      "sf" -> sfDir))
     // Short summary: everything the driver must ingest, no per-query map,
     // always < ~400 bytes so a stdout tail capture cannot truncate it.
-    val shortLine = jsonMap(Seq(
-      "metric" -> "\"total\"",
-      "value" -> secs(total),
-      "unit" -> "\"sec\"",
-      "n_queries" -> results.size.toString,
-      "n_errors" -> results.count(!_.ok).toString,
+    val shortLine = Measure.json(ListMap(
+      "metric" -> "total",
+      "value" -> fixed(total),
+      "unit" -> "sec",
+      "n_queries" -> results.size,
+      "n_errors" -> results.count(!_.ok),
       "errors" -> errors,
-      "calibration_sec" -> secs(calibrationSec),
-      "calibration_cpu_sec" -> secs(calibrationCpuSec),
-      "calibration_io_sec" -> secs(calibrationIoSec),
-      "headline_total" -> secs(headlineTotal),
-      "gridmix_total" -> secs(gmTotal),
-      "detail" -> "\"target/bench.json\"",
-      "sf" -> ("\"" + sfDir + "\""),
+      "calibration_sec" -> fixed(calibrationSec),
+      "calibration_cpu_sec" -> fixed(calibrationCpuSec),
+      "calibration_io_sec" -> fixed(calibrationIoSec),
+      "headline_total" -> fixed(headlineTotal),
+      "gridmix_total" -> fixed(gmTotal),
+      "detail" -> "target/bench.json",
+      "sf" -> sfDir,
     ))
-    try {
+    errs.guard("writing target/bench.json") {
       Files.createDirectories(Paths.get("target"))
       Files.writeString(Paths.get("target/bench.json"), line + "\n")
-    } catch { case _: Throwable => () }
+    }
     // stop FIRST so no shutdown logging lands after the JSON — the driver
     // reads the tail of stdout and the summary line must be last
     spark.stop()

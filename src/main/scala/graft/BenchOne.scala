@@ -1,10 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-import graft.core.GraftSession
-
-/** Dev-loop timing for a few headline queries: `runMain graft.BenchOne
+/** Dev-loop timing for a few catalog queries: `runMain graft.BenchOne
   * <sfDir> <query>[,<query>...] [attempts] [cold]`. Same noop-sink
   * materialization as [[Bench]] (so nothing is pruned), prints each
   * attempt's seconds — iterate on one operator without paying for the
@@ -18,18 +14,14 @@ object BenchOne {
     val names = args(1).split(',').toSeq
     val attempts = if (args.length > 2) args(2).toInt else 2
     val cold = args.length > 3 && args(3) == "cold"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark: SparkSession = GraftSession.builder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session()
     spark.conf.set(graft.core.PlanTrace.DirKey, "target/plans")
     names.foreach { name =>
-      val fn = SparkEntry.headlines(name)
+      val fn = SparkEntry.queries(name)
       (1 to attempts).foreach { i =>
         if (cold) graft.core.Shared.clear()
         System.gc()
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        println(f"[benchone] $name attempt $i: ${(System.nanoTime() - t0) / 1e9}%.3f s")
+        println(f"[benchone] $name attempt $i: ${Measure.noop(fn(spark, sfDir))}%.3f s")
       }
     }
     spark.stop()

@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.execution.FormattedMode
 
-import graft.core.GraftSession
-
 /** Dev-loop plan inspection: print the formatted physical plan of named
   * catalog queries without executing them (AQE-final shapes still come
   * from Bench's post-execution dumps; this is the fast pre-flight view
@@ -15,9 +13,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(',').toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.builder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session()
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       println(s"==== $name ====")

@@ -1,8 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 
-import graft.core.GraftSession
+import scala.collection.immutable.ListMap
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.SparkSession
 
 /** Scaling-exponent bench: time the heaviest catalog queries at two scale
   * factors (sf0.1 and the [[ScaleUp]]-derived sf1) and report each query's
@@ -37,10 +40,7 @@ object ScaleBench {
   private def timeOne(spark: SparkSession, dir: String, name: String): Double = {
     graft.core.Shared.clear()
     System.gc()
-    val t0 = System.nanoTime()
-    SparkEntry.headlines(name)(spark, dir)
-      .write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
+    Measure.noop(SparkEntry.queries(name)(spark, dir))
   }
 
   def main(args: Array[String]): Unit = {
@@ -49,32 +49,32 @@ object ScaleBench {
     val factor = if (args.length > 2) args(2).toDouble else 10.0
     val queries =
       if (args.length > 3) args(3).split(',').toSeq else DefaultQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.builder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session()
 
     val rows = queries.map { q =>
-      try {
-        graft.core.Shared.clear()
-        SparkEntry.headlines(q)(spark, small)
-          .write.format("noop").mode("overwrite").save() // untimed JIT warmup
-        val ts = Seq.fill(2)(timeOne(spark, small, q)).min
-        val tb = Seq.fill(2)(timeOne(spark, big, q)).min
-        val exp = math.log(tb / ts) / math.log(factor)
-        println(f"[scalebench] $q%-20s sf0.1 $ts%7.2f s   sf1 $tb%7.2f s   exponent $exp%5.2f")
-        (q, ts, tb, exp)
-      } catch {
-        case e: Throwable =>
-          println(s"[scalebench] $q FAILED: ${e.getMessage}")
-          (q, -1.0, -1.0, Double.NaN)
-      }
+      val (ts, tb, exp) =
+        try {
+          graft.core.Shared.clear()
+          Measure.noop(SparkEntry.queries(q)(spark, small)) // untimed JIT warmup
+          val ts = Seq.fill(2)(timeOne(spark, small, q)).min
+          val tb = Seq.fill(2)(timeOne(spark, big, q)).min
+          val exp = math.log(tb / ts) / math.log(factor)
+          println(f"[scalebench] $q%-20s sf0.1 $ts%7.2f s   sf1 $tb%7.2f s   exponent $exp%5.2f")
+          (ts, tb, exp)
+        } catch {
+          case NonFatal(e) =>
+            System.err.println(s"[scalebench] $q FAILED: $e")
+            (-1.0, -1.0, Double.NaN)
+        }
+      q -> ListMap("sf01_sec" -> Measure.fixed(ts), "sf1_sec" -> Measure.fixed(tb),
+        "exponent" -> Measure.fixed(exp))
     }
-    val json = rows.map { case (q, ts, tb, exp) =>
-      f""""$q":{"sf01_sec":$ts%.3f,"sf1_sec":$tb%.3f,"exponent":$exp%.3f}"""
-    }.mkString("{", ",", "}")
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("target/scalebench.json"), json + "\n")
-    catch { case _: Throwable => () }
+    val json = Measure.json(ListMap(rows: _*))
+    try Files.writeString(Paths.get("target/scalebench.json"), json + "\n")
+    catch {
+      case NonFatal(e) =>
+        System.err.println(s"[scalebench] writing target/scalebench.json failed: $e")
+    }
     spark.stop()
     println(json)
   }

@@ -3,8 +3,6 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.GraftSession
-
 /** Corpus scale-up: derive an sf1-shaped corpus from the driver's sf0.1
   * parquet by replicating every fact table `factor`× with disjoint,
   * join-consistent key spaces — so the scaling-exponent bench
@@ -116,7 +114,7 @@ object ScaleUp {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "target/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = GraftSession.local()
+    val spark = Measure.session()
     scaleAll(spark, src, out, factor)
     spark.stop()
   }

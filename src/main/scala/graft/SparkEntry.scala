@@ -46,8 +46,4 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     allDefs.flatMap(d => d.oracle.map(d.name -> _)).toMap
-
-  /** Benchmark headline subset. */
-  def headlines: Map[String, (SparkSession, String) => DataFrame] =
-    allDefs.filter(_.headline).map(d => d.name -> d.fn).toMap
 }

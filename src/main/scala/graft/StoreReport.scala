@@ -4,8 +4,6 @@ import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-import graft.core.GraftSession
-
 /** Operator-facing report over the stored-artifact tree: one line per
   * (artifact family, fingerprint) found under target/scratch for a corpus
   * dir — files, bytes, and whether the fingerprint matches the CURRENT
@@ -40,7 +38,7 @@ object StoreReport {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark: SparkSession = GraftSession.local()
+    val spark: SparkSession = Measure.session()
     val key = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
     val root = Paths.get(
       sys.env.getOrElse("GRAFT_SCRATCH", "/root/repo/target/scratch"))

@@ -1,11 +1,17 @@
 package graft
 
+import java.io.File
 import java.nio.file.{Files, Paths}
 
-import graft.core.GraftSession
+import scala.collection.immutable.TreeMap
+
+import org.apache.commons.io.FileUtils
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * `runMain graft.Verify <sfDir> <outDir> [query,query,...]`
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query-name filter (dev iteration;
@@ -13,11 +19,12 @@ object Verify {
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
+      case _ =>
+        System.err.println("usage: graft.Verify <sfDir> <outDir> [query,query,...]")
+        sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.builder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
+    val spark = Measure.session()
+    new File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -30,26 +37,9 @@ object Verify {
         // a dump from an EARLIER run must not survive a crash here — a
         // stale-but-plausible parquet would make the compare report green
         // for a query that just failed
-        val stale = Paths.get(outDir, name)
-        if (Files.exists(stale)) {
-          import scala.jdk.CollectionConverters._
-          Files.walk(stale).iterator().asScala.toSeq.reverse
-            .foreach(Files.deleteIfExists(_))
-        }
+        FileUtils.deleteDirectory(new File(outDir, name))
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // always dump the FULL oracle map, even under a query filter: a
     // filtered dev run would otherwise clobber the map a prior full run
     // wrote, and every unfiltered dump sitting in outDir would fail the
@@ -57,9 +47,8 @@ object Verify {
     // the union of oracle keys and dump dirs, so in a fresh workspace a
     // filtered run still reports the un-run keys as missing — correct,
     // since they genuinely have no dump to compare.
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Measure.json(TreeMap.from(SparkEntry.oracleSql)))
     spark.stop()
   }
 }

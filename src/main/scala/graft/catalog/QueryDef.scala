@@ -10,9 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class QueryDef(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
-    /** included in the benchmark's headline mix */
-    headline: Boolean = true)
+    oracle: Option[String])
 
 trait QueryModule {
   def defs: Seq[QueryDef]

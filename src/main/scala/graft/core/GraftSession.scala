@@ -77,8 +77,9 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
 
-  /** Session for tests / ad-hoc mains. */
-  def local(cpus: Int = Runtime.getRuntime.availableProcessors.min(32)): SparkSession = {
+  /** Session on `local[cpus]` with the WARN log level; mains get theirs
+    * from [[graft.Measure.session]], which decides the core count. */
+  def local(cpus: Int): SparkSession = {
     val s = builder(cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -2,9 +2,14 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+
+import graft.Measure.fixed
+import graft.core.TaskMetricsProbe.jvmGcMs
 
 /** Streaming throughput probes for the bench harness: drive the two
   * stateful shapes that dominate streaming cost — watermarked windowed
@@ -19,8 +24,8 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamingBench {
 
-  /** Run the probes; returns (key → JSON-formatted value): rows/sec
-    * numbers, plus a quoted `<name>_cause` string whenever any attempt
+  /** Run the probes; returns (key → value for [[graft.Measure.json]]):
+    * rows/sec numbers, plus a `<name>_cause` string whenever any attempt
     * failed — a bare −1 in the driver artifact is not adjudicable
     * (round-9 `keyed_sketch_rows_per_sec_min: -1` with no recorded
     * reason), so the failure MODE (deadline / empty progress /
@@ -43,21 +48,20 @@ object StreamingBench {
     * (fresh checkpoint dir, fresh query) before it is allowed to land as
     * −1: one transient stall must not invalidate a whole round's band.
     */
-  def run(spark: SparkSession): Seq[(String, String)] = {
+  def run(spark: SparkSession): Seq[(String, Any)] = {
     // attest the state-store commit path every probe ran under, read back
     // from the session conf (Spark's defaults when unset): a later change
     // of provider or commit mode shows up here instead of masquerading as
     // a throughput delta
     def conf(key: String, default: String): String =
       spark.conf.getOption(key).getOrElse(default)
-    val stateStore = Seq(
-      "provider" -> ("\"" + conf("spark.sql.streaming.stateStore.providerClass",
-        "HDFSBackedStateStoreProvider").split('.').last + "\""),
+    val stateStore = ListMap(
+      "provider" -> conf("spark.sql.streaming.stateStore.providerClass",
+        "HDFSBackedStateStoreProvider").split('.').last,
       "changelog_checkpointing" -> conf(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "false"),
-      "join_state_format" -> conf("spark.sql.streaming.join.stateFormatVersion", "2"))
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    def band2(name: String, warm: Boolean = false, attempts: Int = 2)(attempt: => (Double, String)): Seq[(String, String)] = {
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "false").toBoolean,
+      "join_state_format" -> conf("spark.sql.streaming.join.stateFormatVersion", "2").toInt)
+    def band2(name: String, warm: Boolean = false, attempts: Int = 2)(attempt: => Attempt): Seq[(String, Any)] = {
       // per-attempt cause record (round-11 verdict task 1): every timed
       // attempt — including the dropped worst — lands in
       // `<name>_attempts` with the fields that adjudicate WHY it differs:
@@ -67,8 +71,7 @@ object StreamingBench {
       // (state_ms). A slow attempt with high gc_pct or state_ms is
       // environment/state-load, not engine throughput — the artifact now
       // says so itself instead of needing builder prose.
-      lastAttemptDetail = "{}"
-      val details = scala.collection.mutable.ArrayBuffer.empty[String]
+      val details = scala.collection.mutable.ArrayBuffer.empty[ListMap[String, Any]]
       // warm=true runs one UNTIMED attempt first — the streaming analog of
       // the batch harness's warm_first: the mapGroupsWithState probe's
       // per-row typed lambda ramps through the interpreter across most of
@@ -78,17 +81,16 @@ object StreamingBench {
       // both timed attempts run compiled
       if (warm) { val _ = attempt }
       // retry-once: a failed attempt gets one fresh replacement before −1
-      def tried(): (Double, String) = {
+      def tried(): Attempt = {
         val first = attempt
-        val r = if (first._1 >= 0) first
+        val last = if (first.rps >= 0) first
         else {
-          System.err.println(s"[bench] $name attempt failed (${first._2}); retrying once")
-          val second = attempt
-          if (second._1 >= 0) second
-          else (-1.0, s"${first._2};retry:${second._2}")
+          System.err.println(s"[bench] $name attempt failed (${first.cause}); retrying once")
+          attempt
         }
-        details += lastAttemptDetail
-        r
+        details += last.detail
+        if (last.rps >= 0) last
+        else last.copy(cause = s"${first.cause};retry:${last.cause}")
       }
       // attempts=3 (keyed_sketch): the headline band is BEST TWO of the
       // three timed attempts — the round-10 verdict's prescribed protocol
@@ -96,16 +98,16 @@ object StreamingBench {
       // the per-batch median can't absorb. The dropped worst attempt is
       // DISCLOSED under `<name>_drop` so the full spread stays attested.
       val all = Seq.fill(attempts)(tried())
-      val causes = all.filter(_._1 < 0).map(_._2)
-      val sorted = all.map(_._1).sorted.reverse // best first
-      Seq(name -> f"${sorted.head}%.0f",
-        s"${name}_min" -> f"${sorted(1)}%.0f") ++
+      val causes = all.filter(_.rps < 0).map(_.cause)
+      val sorted = all.map(_.rps).sorted.reverse // best first
+      Seq(name -> fixed(sorted.head, 0),
+        s"${name}_min" -> fixed(sorted(1), 0)) ++
         (if (attempts > 2)
-           Seq(s"${name}_drop" -> f"${sorted.last}%.0f")
+           Seq(s"${name}_drop" -> fixed(sorted.last, 0))
          else Seq.empty) ++
-        Seq(s"${name}_attempts" -> details.mkString("[", ",", "]")) ++
+        Seq(s"${name}_attempts" -> details.toSeq) ++
         (if (causes.isEmpty) Seq.empty
-         else Seq(s"${name}_cause" -> ("\"" + causes.mkString("|").replace("\"", "'") + "\"")))
+         else Seq(s"${name}_cause" -> causes.mkString("|")))
     }
     // warm + best-two-of-three (the keyed-sketch treatment): the r11
     // driver artifact showed a 2.21 attempt band on this probe with the
@@ -182,23 +184,17 @@ object StreamingBench {
     */
   private val DeadlineSec = 180L
 
-  /** Per-attempt cause record (JSON object) left behind by the most recent
-    * [[measure]] call; [[run]]'s band2 collects these into
+  /** One probe attempt: its median rows/sec (−1 when it produced none),
+    * the cause string, and the cause record [[run]] lists under
     * `<name>_attempts` so the artifact itself explains attempt spread.
     */
-  private var lastAttemptDetail: String = "{}"
-
-  private def jvmGcMs: Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(_.getCollectionTime).filter(_ > 0).sum
-  }
+  private final case class Attempt(rps: Double, cause: String,
+                                   detail: ListMap[String, Any])
 
   private def measure(spark: SparkSession, batches: Int,
                       outputMode: String = "append")(
-      build: SparkSession => DataFrame): (Double, String) = {
+      build: SparkSession => DataFrame): Attempt = {
     val ckpt = Files.createTempDirectory("graft-sbench").toString
-    lastAttemptDetail = "{}"
     val gc0 = jvmGcMs
     val wall0 = System.nanoTime()
     try {
@@ -233,16 +229,22 @@ object StreamingBench {
       val addBatchMs = ps.toSeq.flatMap(p =>
         Option(p.durationMs.get("addBatch")).map(_.toLong)
       ).sorted.lift(ps.length / 2).getOrElse(-1L)
-      lastAttemptDetail =
-        f"""{"rps_med":${perBatch.lift(perBatch.size / 2).getOrElse(-1.0)}%.0f,"rps_lo":${perBatch.headOption.getOrElse(-1.0)}%.0f,"rps_hi":${perBatch.lastOption.getOrElse(-1.0)}%.0f,"batches":$productive,"wall_s":$wallS%.1f,"gc_ms":$gcMs,"gc_pct":${100.0 * gcMs / math.max(1.0, wallS * 1000)}%.1f,"state_ms":$stateMs,"addbatch_ms":$addBatchMs}"""
-      if (perBatch.nonEmpty) (perBatch(perBatch.size / 2), "ok")
+      val detail = ListMap(
+        "rps_med" -> fixed(perBatch.lift(perBatch.size / 2).getOrElse(-1.0), 0),
+        "rps_lo" -> fixed(perBatch.headOption.getOrElse(-1.0), 0),
+        "rps_hi" -> fixed(perBatch.lastOption.getOrElse(-1.0), 0),
+        "batches" -> productive, "wall_s" -> fixed(wallS, 1), "gc_ms" -> gcMs,
+        "gc_pct" -> fixed(100.0 * gcMs / math.max(1.0, wallS * 1000), 1),
+        "state_ms" -> stateMs, "addbatch_ms" -> addBatchMs)
+      if (perBatch.nonEmpty) Attempt(perBatch(perBatch.size / 2), "ok", detail)
       else if (deadlineHit)
-        (-1.0, s"deadline_${DeadlineSec}s_${productive}batches")
-      else (-1.0, "empty_progress")
+        Attempt(-1.0, s"deadline_${DeadlineSec}s_${productive}batches", detail)
+      else Attempt(-1.0, "empty_progress", detail)
     } catch {
       case e: Throwable =>
         System.err.println(s"[bench] streaming probe failed: ${e.getMessage}")
-        (-1.0, s"exception:${Option(e.getMessage).getOrElse(e.getClass.getSimpleName).take(80)}")
+        Attempt(-1.0, s"exception:${Option(e.getMessage).getOrElse(e.getClass.getSimpleName).take(80)}",
+          ListMap.empty)
     }
   }
 }

@@ -23,10 +23,6 @@ class CatalogSpec extends AnyFunSuite {
     assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
   }
 
-  test("headline set is a subset of the query set") {
-    assert(SparkEntry.headlines.keySet.subsetOf(SparkEntry.queries.keySet))
-  }
-
   // The driver's oracle comparator sorts result frames; an array/map/struct
   // output column crashes it and the query lands unattested (the round-5
   // user_history `err`). Building the frame is analysis-only for most
