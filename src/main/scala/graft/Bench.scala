@@ -252,16 +252,16 @@ object Bench {
     // before the timed attempts, per query, where nothing can evict it.
     errs.guard("pentomino kernel warm-up")(
       graft.operators.DistributedSearch.warmPentKernel())
-    // bfs_hops: its dominant cold cost is the memoized co-purchase edge
-    // build ([[graft.catalog.Algorithms.bfsHops]]) — warming populates the
-    // Shared memo so BOTH timed attempts measure the traversal, and the
-    // build cost is disclosed here instead of reading as a 3× max band
-    // graph_diameter: its inputs are already memoized (the co-purchase
-    // edge frame, built and attributed under bfs_hops), yet r8 showed a
-    // 3.2/9.9 cold/warm band — the cold attempt pays C2 compilation of
-    // the double-sweep's per-round join/min-agg loop bodies plus the
-    // three 1-row argmax collects' first codegen; warm both attempts so
-    // the timed number is the traversal (disclosed via warm_first)
+    // bfs_hops: its dominant cold cost is the memoized co-purchase
+    // adjacency build ([[graft.catalog.Algorithms.bfsHops]]) — warming
+    // populates the Shared memo so BOTH timed attempts measure the
+    // traversal, and the build cost is disclosed here instead of reading
+    // as a 3× max band
+    // graph_diameter: its input is already memoized (the adjacency, built
+    // and attributed under bfs_hops), but its first attempt pays the JIT
+    // compilation of the per-round expansion and the first codegen of the
+    // adjacency scan; warm both attempts so the timed number is the two
+    // sweeps' rounds (disclosed via warm_first)
     // bm25_topk / graph_assortativity: each is the FIRST consumer of its
     // shared build (bm25_index / weighted_co_edges), so its first timed
     // attempt paid the build and the max band stayed 3-6× wide even with

@@ -20,89 +20,53 @@ object Algorithms extends QueryModule {
     * order). Edge build is a self-equi-join on the order key — per-order
     * multiplicity is bounded by order size (~7 lines), so the join output
     * is O(|lineitem| · linesPerOrder), never quadratic in parts. The
-    * iterative expansion is [[Bfs.hopsFrom]]: one equi-join + one
-    * min-aggregate per round. The oracle's recursive CTE enumerates the
-    * same closure centrally.
+    * iterative expansion is [[Bfs.Adjacency.hopsFrom]]: one job per round
+    * over the cached adjacency with a broadcast bitmap frontier. The
+    * oracle's recursive CTE enumerates the same closure centrally.
     */
   // pair build as ONE key shuffle: collect each order's part set (order
-  // size ~7, so arrays are tiny and map-side combine bites), explode the
-  // ordered pairs in-stage, dedup once. Both directions are emitted here
-  // so consumers skip their own symmetrize pass — vs the former
-  // self-join this halves the shuffled volume (no second sort side, no
-  // second distinct). Memoized ([[graft.core.Shared]]): the build is the
-  // dominant cost of a traversal, and at scale the co-purchase graph is
-  // derived once, not once per traversal — memoizing also makes the
-  // bench's cold/warm spread attributable via `shared_builds`. Shared by
-  // [[bfsHops]] and [[graphDiameter]].
-  // persist = true: BFS consumers probe this frame EVERY round (8 join
-  // rounds per sweep, two sweeps in graph_diameter) — one process-wide
-  // columnar copy beats the former per-sweep persist/unpersist churn
-  // The memo is handed over HASH-PARTITIONED ON `u` (the probe key):
-  // checkpoint + columnar cache both preserve that partitioning, so the
-  // per-round frontier joins inside [[Bfs.hopsFrom]] never re-shuffle the
-  // edge frame (round 13 paid a 54.7 MiB edge exchange EVERY round). The
-  // partition count comes from spark.sql.shuffle.partitions — the same
-  // scale knob every other exchange uses — not a local constant.
-  private def coPurchaseEdges(spark: SparkSession, dir: String): DataFrame =
-    graft.core.Shared.memo(spark, "bfs_copurchase_edges", dir, persistPlan = true) {
+  // size ~7, so arrays are tiny and map-side combine bites) and explode
+  // the ordered pairs in-stage, both directions, so the adjacency build
+  // needs no symmetrize pass; it drops duplicate pairs itself while
+  // building each partition's CSR, so there is no distinct shuffle here.
+  // Memoized ([[graft.core.Shared]]): the build is the dominant cost of a
+  // traversal, and at scale the co-purchase graph is derived once, not
+  // once per traversal — memoizing also makes the bench's cold/warm
+  // spread attributable via `shared_builds`. Shared by [[bfsHops]] and
+  // [[graphDiameter]], which also read its vertex count (the traversal's
+  // coverage exit) and max-degree vertex (the first sweep's source).
+  private def coPurchase(spark: SparkSession, dir: String): Bfs.Adjacency =
+    graft.core.Shared.memoValue(spark, "bfs_copurchase_adjacency", dir,
+        (a: Bfs.Adjacency) => a.unpersist()) {
       val li = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_partkey"))
-      li.groupBy(col("l_orderkey"))
+      Bfs.adjacency(li.groupBy(col("l_orderkey"))
         .agg(collect_set(col("l_partkey")).as("ps"))
         .select(explode(col("ps")).as("u"), col("ps"))
         .select(col("u"), explode(col("ps")).as("v"))
-        .where(col("u") =!= col("v"))
-        .distinct()
-        .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
-          col("u"))
-    }
-
-  // |V| of the co-purchase graph and per-vertex degree, derived once per
-  // corpus from the memoized edge frame. Consumers count it (20k rows at
-  // sf0.1 — one trivial job) to drive [[Bfs.hopsFrom]]'s coverage exit:
-  // once every edge-bearing vertex is reached, the remaining hop rounds
-  // are full-probe no-ops and are skipped.
-  private def coPurchaseDeg(spark: SparkSession, dir: String): DataFrame =
-    graft.core.Shared.memo(spark, "bfs_copurchase_deg", dir) {
-      coPurchaseEdges(spark, dir).groupBy(col("u")).agg(count(lit(1)).as("deg"))
+        .where(col("u") =!= col("v")))
     }
 
   def bfsHops(spark: SparkSession, dir: String): DataFrame =
-    Bfs.hopsFrom(coPurchaseEdges(spark, dir), src = 1L, maxHops = 3,
-      trace = Some("bfs_hops"), symmetrized = true, materialized = true,
-      vertexCount = Some(coPurchaseDeg(spark, dir).count()))
+    coPurchase(spark, dir).hopsFrom(src = 1L, maxHops = 3).toDF
 
   /** Graph-diameter lower bound by the classic double sweep: BFS from the
     * max-degree vertex, then a second BFS from the farthest vertex found —
     * the second eccentricity is a (usually tight) diameter lower bound at
     * the cost of TWO bounded traversals, where the exact diameter needs
-    * all-pairs. Reuses the shared co-purchase edge frame and
-    * [[Bfs.hopsFrom]]'s delta-frontier rounds; the only driver state is
-    * three 1-row argmax collects (source pick, far pick, eccentricity),
-    * each with a deterministic (metric DESC, id ASC) tiebreak the
-    * oracle's recursive-CTE replay mirrors exactly. Hop caps bound the
-    * work (and are part of the operator's contract: ecc_lb is "within
-    * `maxHops`").
+    * all-pairs. The source comes from the adjacency build and the far
+    * vertex and eccentricity from the traversals' level bitmaps, so the
+    * only jobs are the sweeps' rounds. Each pick has a deterministic
+    * (metric DESC, id ASC) tiebreak the oracle's recursive-CTE replay
+    * mirrors exactly. Hop caps bound the work (and are part of the
+    * operator's contract: ecc_lb is "within `maxHops`").
     */
   def graphDiameter(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val edges = coPurchaseEdges(spark, dir)
-    // the max-degree source pick re-scans the full edge set; like the
-    // edge frame itself it is derived once per corpus in production, so
-    // the |V|-row degree table is its own Shared memo (one 1-row argmax
-    // per attempt instead of a 2.4M-row rollup per attempt at sf0.1)
-    val deg = coPurchaseDeg(spark, dir)
-    val nVertices = Some(deg.count())
-    val src0 = deg.orderBy(col("deg").desc, col("u")).limit(1)
-      .head().getLong(0)
-    val d1 = Bfs.hopsFrom(edges, src0, maxHops = 4,
-      trace = Some("graph_diameter_s1"), symmetrized = true,
-      materialized = true, vertexCount = nVertices)
-    val far = d1.orderBy(col("hops").desc, col("part_id")).limit(1)
-      .head().getLong(0)
-    val d2 = Bfs.hopsFrom(edges, far, maxHops = 4,
-      trace = Some("graph_diameter_s2"), symmetrized = true,
-      materialized = true, vertexCount = nVertices)
-    val ecc = d2.agg(max(col("hops"))).head().getInt(0)
+    val adj = coPurchase(spark, dir)
+    val src0 = adj.hub.getOrElse(
+      throw new IllegalArgumentException("graph_diameter: the co-purchase graph has no edges"))
+    val far = adj.hopsFrom(src0, maxHops = 4).far
+    val ecc = adj.hopsFrom(far, maxHops = 4).ecc
     Seq((src0, far, ecc)).toDF("src_node", "far_node", "ecc_lb")
   }
 

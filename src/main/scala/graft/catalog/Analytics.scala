@@ -1298,7 +1298,7 @@ object Analytics extends QueryModule {
     // basket sets in ONE key shuffle (collect_set dedups p within order,
     // so no separate distinct pass), materialized once and fanned out
     // in-stage for BOTH the pair build and the per-part order counts —
-    // the coPurchaseEdges device (Algorithms.scala); the former
+    // the co-purchase pair build's device (Algorithms.coPurchase); the former
     // (o,p)-distinct + self-join shape paid ~4 pair-volume shuffles and
     // derived the basket frame three times
     val sets = graft.core.Materialize(

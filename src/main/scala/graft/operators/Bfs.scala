@@ -1,121 +1,203 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable.ArrayBuffer
 
-import graft.core.{Materialize, PlanTrace}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
+import org.roaringbitmap.longlong.Roaring64NavigableMap
 
 /** Bounded-depth breadth-first search: minimum hop distance from a source
-  * vertex over an undirected edge set, as iterative DELTA-frontier
-  * expansion.
+  * vertex over an undirected edge set, one Spark job per round.
   *
-  * Per round: join the (small, materialized) frontier against the cached
-  * edge set, collapse path multiplicity with a `distinct` BEFORE anything
-  * else sees it — on a dense graph the hop-3 path count is ~100× the
-  * vertex count, and collapsing early keeps that explosion inside one
-  * map-side partial aggregate — then anti-join against the vertices
-  * already reached to extract only the NEWLY discovered ones. Because BFS
-  * discovers every vertex first at its minimum depth, tagging the delta
-  * with the round number IS the min-aggregate; no re-aggregation of the
-  * full distance table ever happens.
+  * The edges are built once into a cached adjacency: per partition, the
+  * sorted source ids, their offsets and a neighbour array (CSR), hash-
+  * partitioned on the source id so each vertex lives in one partition.
+  * The frontier is a broadcast compressed bitmap of 64-bit vertex ids
+  * (`Roaring64NavigableMap`), so raw ids need no dense remap. A round is
+  * one job: every partition looks up the frontier vertices it holds and
+  * returns the bitmap of their neighbours; the driver ORs those and
+  * subtracts the visited set. BFS discovers every vertex first at its
+  * minimum depth, so round `h`'s new bitmap IS the set at distance `h`;
+  * no edge row is shuffled per round and no distance table is rewritten.
   *
-  * Scale shape: only the O(|frontier delta|) rows are checkpointed per
-  * round ([[Materialize]] — local in tests, reliable dir on a cluster),
-  * never the O(|V|) running distance table; the result is the lazy union
-  * of the per-round materialized deltas. Edges are symmetrized once,
-  * hash-partitioned on the probe key and cached, so no round re-shuffles
-  * them — a small frontier side broadcasts under AQE instead.
-  *
-  * The reference expresses this exact pattern as one MapReduce job PER
-  * ROUND with the FULL distance table re-read from and re-written to HDFS
-  * each time (the classic "iterative MR" tax its DAG framework cannot
-  * avoid; cf. JobControl chaining, reference
-  * src/mapred/org/apache/hadoop/mapred/jobcontrol/) — the delta-only
-  * checkpoint is precisely what that model cannot express.
+  * The reference expresses this pattern as one MapReduce job PER ROUND
+  * with the FULL distance table re-read from and re-written to HDFS each
+  * time (cf. JobControl chaining, reference
+  * src/mapred/org/apache/hadoop/mapred/jobcontrol/).
   */
 object Bfs {
 
-  /** @param edges  two BIGINT columns `u`, `v`; treated as undirected.
-    * @param trace  optional query label for per-round plan capture
-    *               ([[PlanTrace]]; files `<trace>_round<k>.txt`).
-    * @param symmetrized  set when `edges` already holds BOTH directions of
-    *               every undirected edge, deduplicated — skips the
-    *               internal symmetrize + distinct (one full edge shuffle).
-    * @param materialized  set when `edges` is ALREADY block-backed (a
-    *               [[graft.core.Shared]] memo / [[Materialize]]d frame):
-    *               skips the internal persist, which would copy every edge
-    *               block into the cache a second time per traversal — under
-    *               a full bench suite's block-manager pressure those
-    *               redundant copies evict real working sets and got billed
-    *               to this operator (round-9 `graph_diameter` regression).
-    *               The caller should hand the frame over ALREADY
-    *               hash-partitioned on `u` (see below) so no round
-    *               re-shuffles it.
-    * @param vertexCount  total vertices carrying at least one edge, when
-    *               the caller knows it (one count of a memoized degree
-    *               frame). Once every such vertex is reached, no later
-    *               round can discover anything — each remaining round
-    *               would still pay a full probe of the edge frame to
-    *               compute an empty delta, so coverage exits the loop
-    *               early with a provably identical result.
-    * @return `part_id`, `hops` for every vertex within `maxHops` of `src`.
+  /** One partition's adjacency: the neighbours of `ids(i)` are
+    * `nbrs(offsets(i) until offsets(i + 1))`; `ids` ascend (signed).
     */
-  def hopsFrom(edges: DataFrame, src: Long, maxHops: Int,
-               trace: Option[String] = None,
-               symmetrized: Boolean = false,
-               materialized: Boolean = false,
-               vertexCount: Option[Long] = None): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
+  final class Csr(val ids: Array[Long], val offsets: Array[Int], val nbrs: Array[Long])
+      extends Serializable {
 
-    // symmetrize once (unless the caller already did) and cache HASH-
-    // PARTITIONED ON THE PROBE KEY `u`: localCheckpoint/persist preserve
-    // the child partitioning, so every round's frontier join sees the
-    // edge side as already satisfying its distribution and ships ONLY the
-    // frontier. Without this the per-round join planned as SortMergeJoin
-    // and AQE's broadcast rescue came too late — the full edge exchange
-    // (|E| rows, round 13: 54.7 MiB × every round) had already run by the
-    // time the frontier's true size was known.
-    val sym =
-      if (symmetrized) edges.select(col("u"), col("v"))
-      else edges.select(col("u"), col("v"))
-        .union(edges.select(col("v").as("u"), col("u").as("v")))
-        .distinct()
-    val e =
-      if (materialized) sym
-      else sym.repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
-          col("u"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-
-    var frontier = Materialize(Seq((src, 0)).toDF("part_id", "hops"))
-    var dist = frontier
-    var h = 0
-    var frontierSize = 1L
-    var visited = 1L
-    while (h < maxHops && frontierSize > 0 && vertexCount.forall(visited < _)) {
-      h += 1
-      // neighbors of the frontier, path multiplicity collapsed map-side.
-      // SHUFFLE_HASH with the frontier as build side: the co-partitioned
-      // edge frame is probed in place (no per-round edge shuffle OR sort),
-      // and the frontier — which on a dense graph grows toward |V|, far
-      // past broadcast safety — is split across the edge partitions
-      // instead of shipped whole to every task.
-      val cand = frontier.hint("shuffle_hash")
-        .join(e, col("part_id") === col("u"))
-        .select(col("v").as("part_id"))
-        .distinct()
-      // delta = candidates not reached in ANY earlier round; first
-      // discovery is at minimum depth, so hops := h needs no min()
-      val newF = cand.join(dist, Seq("part_id"), "left_anti")
-        .select(col("part_id"), lit(h).as("hops"))
-      frontier = Materialize(newF)
-      trace.foreach(t => PlanTrace.capture(newF, s"${t}_round$h"))
-      frontierSize = frontier.count()
-      visited += frontierSize
-      dist = dist.union(frontier)
+    /** Adds the neighbours of every frontier vertex held here to `out`.
+      * Every partition sees the whole frontier, so it binary-searches its
+      * ids for each frontier vertex only while the frontier is the smaller
+      * side, and otherwise tests each of its ids against the bitmap.
+      * `size` is the frontier's cardinality, taken on the driver: the
+      * bitmap's cardinality cache is not safe to fill from concurrent
+      * tasks sharing one broadcast.
+      */
+    def expand(frontier: Roaring64NavigableMap, size: Long,
+               out: Roaring64NavigableMap): Unit = {
+      def add(i: Int): Unit = {
+        var j = offsets(i)
+        while (j < offsets(i + 1)) { out.addLong(nbrs(j)); j += 1 }
+      }
+      if (size < ids.length)
+        frontier.forEach { v =>
+          val i = java.util.Arrays.binarySearch(ids, v)
+          if (i >= 0) add(i)
+        }
+      else {
+        var i = 0
+        while (i < ids.length) { if (frontier.contains(ids(i))) add(i); i += 1 }
+      }
     }
-    if (!materialized) e.unpersist()
-    dist
+
+    /** The highest-degree vertex here, ties to the lowest id. */
+    def hub: Option[(Int, Long)] =
+      ids.indices.map(i => (offsets(i + 1) - offsets(i), ids(i)))
+        .minByOption { case (deg, id) => (-deg, id) }
+  }
+
+  private object Csr {
+    /** Builds from `(u, v)` rows sorted by `(u, v)`, dropping duplicate
+      * pairs and self-loops.
+      */
+    def of(rows: Iterator[InternalRow]): Csr = {
+      val ids = Array.newBuilder[Long]
+      val offsets = Array.newBuilder[Int]
+      val nbrs = Array.newBuilder[Long]
+      var n = 0
+      var first = true
+      var u0, v0 = 0L
+      rows.foreach { r =>
+        val u = r.getLong(0)
+        val v = r.getLong(1)
+        if (u != v && (first || u != u0 || v != v0)) {
+          if (first || u != u0) { ids += u; offsets += n; first = false }
+          nbrs += v; n += 1
+          u0 = u; v0 = v
+        }
+      }
+      offsets += n
+      new Csr(ids.result(), offsets.result(), nbrs.result())
+    }
+  }
+
+  /** The cached adjacency plus what its build learned on the way:
+    * `vertices` = how many vertices carry an edge; `hub` = the max-degree
+    * vertex, ties to the lowest id (None when there are no edges).
+    */
+  final class Adjacency(spark: SparkSession, parts: RDD[Csr],
+                        val vertices: Long, val hub: Option[Long]) {
+
+    /** Frees the cached partitions; later reads recompute them. */
+    def unpersist(): Unit = parts.unpersist(blocking = false)
+
+    /** Traverses from `src` for at most `maxHops` rounds. Once every
+      * vertex with an edge is visited no later round can find one, so the
+      * loop exits early with an identical result.
+      */
+    def hopsFrom(src: Long, maxHops: Int): Hops = {
+      val levels = ArrayBuffer(bitmap(src))
+      val visited = bitmap(src)
+      var frontier = levels.head
+      var rounds = 0
+      while (rounds < maxHops && !frontier.isEmpty && visited.getLongCardinality < vertices) {
+        rounds += 1
+        val f = spark.sparkContext.broadcast(frontier)
+        val size = frontier.getLongCardinality
+        frontier = parts.map { c => val out = bitmap(); c.expand(f.value, size, out); out }
+          .fold(bitmap()) { (a, b) => a.or(b); a }
+        frontier.andNot(visited)
+        visited.or(frontier)
+        if (!frontier.isEmpty) levels += frontier
+      }
+      new Hops(spark, parts, levels.toVector, rounds)
+    }
+  }
+
+  /** A traversal's result: `levels(h)` holds the vertices at distance `h`
+    * (level 0 is the source; no level is empty); `rounds` = jobs run.
+    */
+  final class Hops(spark: SparkSession, parts: RDD[Csr],
+                   levels: Vector[Roaring64NavigableMap], val rounds: Int) {
+
+    /** Largest distance reached. */
+    def ecc: Int = levels.length - 1
+
+    /** The farthest vertex, ties to the lowest id (signed). */
+    def far: Long = levels.last.first()
+
+    /** `part_id`, `hops` for every reached vertex, lazily: each adjacency
+      * partition tags the vertices it holds with their level, against the
+      * broadcast level bitmaps; the source is its own row.
+      */
+    def toDF: DataFrame = {
+      val ls = spark.sparkContext.broadcast(levels.tail.toArray)
+      val reached = parts.mapPartitions { it =>
+        val l = ls.value
+        it.flatMap(_.ids.iterator.flatMap { id =>
+          val h = l.indexWhere(_.contains(id))
+          if (h >= 0) Some(Row(id, h + 1)) else None
+        })
+      }
+      val src = spark.sparkContext.parallelize(Seq(Row(levels.head.first(), 0)), 1)
+      spark.createDataFrame(reached.union(src), StructType(Seq(
+        StructField("part_id", LongType, nullable = false),
+        StructField("hops", IntegerType, nullable = false))))
+    }
+  }
+
+  /** Builds the adjacency in one pass over `pairs`: two BIGINT columns
+    * `u`, `v` holding BOTH directions of every undirected edge. Duplicate
+    * pairs and self-loops are dropped here.
+    */
+  def adjacency(pairs: DataFrame): Adjacency = {
+    val spark = pairs.sparkSession
+    val parts = pairs.select(col("u").cast("long"), col("v").cast("long"))
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("u"))
+      .sortWithinPartitions(col("u"), col("v"))
+      .queryExecution.toRdd
+      .mapPartitions(rows => Iterator.single(Csr.of(rows)))
+      .setName("bfs_adjacency")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val stats = parts.map(c => (c.ids.length.toLong, c.hub)).collect()
+    val hub = stats.flatMap(_._2).minByOption { case (deg, id) => (-deg, id) }
+    new Adjacency(spark, parts, stats.map(_._1).sum, hub.map(_._2))
+  }
+
+  /** [[adjacency]] of `edges` (`u`, `v`), each edge taken in both
+    * directions.
+    */
+  def undirected(edges: DataFrame): Adjacency =
+    adjacency(edges.select(col("u"), col("v")).union(edges.select(col("v"), col("u"))))
+
+  /** @param edges  two BIGINT columns `u`, `v`; treated as undirected.
+    * @return `part_id`, `hops` for every vertex within `maxHops` of `src`.
+    *         The adjacency is released on return, so running the frame
+    *         rebuilds the partitions it reads.
+    */
+  def hopsFrom(edges: DataFrame, src: Long, maxHops: Int): DataFrame = {
+    val adj = undirected(edges)
+    val hops = adj.hopsFrom(src, maxHops)
+    adj.unpersist()
+    hops.toDF
+  }
+
+  /** Empty bitmap ordered by SIGNED id, so `first()` is the lowest id. */
+  private def bitmap(ids: Long*): Roaring64NavigableMap = {
+    val b = new Roaring64NavigableMap(true)
+    ids.foreach(b.addLong)
+    b
   }
 }

@@ -19,24 +19,27 @@ class AlgorithmsSpec extends SparkSpec {
     assert(got === Map(1L -> 0, 2L -> 1, 3L -> 1, 4L -> 2))
   }
 
-  test("bfs: coverage exit (vertexCount) never changes the distances") {
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 3L), (9L, 10L))
+  test("bfs: coverage exit never changes the distances") {
+    val island = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 3L), (9L, 10L))
       .toDF("u", "v")
-    val base = Bfs.hopsFrom(edges, src = 1L, maxHops = 5)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    // 6 edge-bearing vertices total; the 9-10 component is unreachable, so
-    // coverage is never hit and the exit must stay dormant
-    val dormant = Bfs.hopsFrom(edges, src = 1L, maxHops = 5,
-        vertexCount = Some(6L))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(dormant === base)
-    // fully-covered connected graph: exit fires after hop 1 of 5 and the
-    // result is still the complete distance map
-    val tiny = Seq((1L, 2L)).toDF("u", "v")
-    val got = Bfs.hopsFrom(tiny, src = 1L, maxHops = 5,
-        vertexCount = Some(2L))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(got === Map(1L -> 0, 2L -> 1))
+    def run(edges: org.apache.spark.sql.DataFrame): (Int, Map[Long, Int]) = {
+      val adj = Bfs.undirected(edges)
+      try {
+        val h = adj.hopsFrom(1L, maxHops = 5)
+        (h.rounds, h.toDF.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap)
+      } finally adj.unpersist()
+    }
+    // 6 edge-bearing vertices; the 9-10 component is unreachable, so
+    // coverage is never hit and the exit stays dormant: the loop stops only
+    // when round 3 finds nothing new
+    val (dormantRounds, dormant) = run(island)
+    assert(dormantRounds === 3)
+    assert(dormant === Map(1L -> 0, 2L -> 1, 3L -> 1, 4L -> 2))
+    // fully covered connected graph: every vertex is visited after round 2,
+    // so the exit skips round 3 and the distance map is the same
+    val (coveredRounds, covered) = run(island.where($"u" =!= 9L))
+    assert(coveredRounds === 2)
+    assert(covered === dormant)
   }
 
   test("bfs_hops: sf0.001 closure matches the recursive-CTE oracle shape") {
