@@ -160,7 +160,7 @@ object Bench {
     }
     val attempts = Seq.fill(2)(
       try Right(once()) catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           if (probe.isDefined)
             attemptRecords += ListMap("sec" -> fixed(-1.0), "error" -> true)
           Left(e)

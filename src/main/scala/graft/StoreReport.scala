@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Operator-facing report over the stored-artifact tree: one line per
@@ -61,7 +63,11 @@ object StoreReport {
     def currentFp(table: String): String =
       fpCache.getOrElseUpdate(table,
         try graft.operators.StageCommit.corpusFingerprint(sfDir, table)
-        catch { case _: Throwable => "<absent>" })
+        catch {
+          case NonFatal(e) =>
+            System.err.println(s"[storereport] fingerprint of $table failed: $e")
+            "<absent>"
+        })
     val isFp = "[0-9a-f]{16}".r
     val rows = scala.collection.mutable.Buffer.empty[Row]
     var scratchFamilies = 0; var scratchBytes = 0L

@@ -4,6 +4,7 @@ import java.io.File
 import java.nio.file.{Files, Paths}
 
 import scala.collection.immutable.TreeMap
+import scala.util.control.NonFatal
 
 import org.apache.commons.io.FileUtils
 
@@ -32,7 +33,7 @@ object Verify {
         val df = fn(spark, sfDir)
         graft.catalog.SchemaGuard.assertScalar(name, df)
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // a dump from an EARLIER run must not survive a crash here — a
         // stale-but-plausible parquet would make the compare report green

@@ -75,7 +75,31 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.sql.session.timeZone", "UTC")
+      // Spark's cache of compiled whole-stage classes holds 100 by default.
+      // One pass of the benchmark's pipeline_heavy workload uses about 276
+      // distinct classes, and Guava splits the size across 4 segments, each
+      // LRU: a pass walks its classes in a cycle, so at 100 every warm pass
+      // recompiled every class (252 classes, 2.4 s of driver time traced).
+      // 384 gives 96 per segment against the ~73 that 276 classes plus the
+      // set-up's 16 spread to. Each entry costs about 27 KB of heap (the
+      // source key, the bytecode and a class loader), so it is not larger.
+      // This is a static conf read once per JVM, when the code generator is
+      // first used: it takes effect only if this builder makes the JVM's
+      // first session.
+      .config("spark.sql.codegen.cache.maxEntries", "384")
       .config("spark.ui.enabled", "false")
+      // With the UI off nothing in the engine reads Spark's status store,
+      // yet by default it keeps the last 1000 SQL executions (each with its
+      // plan string and plan graph), 1000 jobs and 1000 stages on the heap.
+      // Keeping 50 / 100 / 100 pays for half of the larger class cache: on
+      // catalog_sweep the cache alone raised the retained heap from 103.0
+      // to 110.4 MB, and with these values it is 106.8 (pipeline_heavy:
+      // 94.1 -> 98.1). Keeping 10 of each saved another 2-3 MB, but
+      // pipeline_heavy's pass was slower in 5 of 5 pairs (medians 5.3 vs
+      // 5.1 s), so the lower values were not taken.
+      .config("spark.sql.ui.retainedExecutions", "50")
+      .config("spark.ui.retainedJobs", "100")
+      .config("spark.ui.retainedStages", "100")
 
   /** Session on `local[cpus]` with the WARN log level; mains get theirs
     * from [[graft.Measure.session]], which decides the core count. */

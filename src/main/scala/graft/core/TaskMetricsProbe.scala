@@ -2,6 +2,8 @@ package graft.core
 
 import java.util.concurrent.atomic.LongAdder
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
@@ -62,7 +64,8 @@ object TaskMetricsProbe {
     * action has seen every task-end event. `LiveListenerBus.waitUntilEmpty`
     * is private[spark] (public in bytecode) — reached reflectively, with a
     * bounded-sleep fallback: a missed drain skews one attempt's cause
-    * fields, never a timing, so best-effort is the right contract.
+    * fields, never a timing, so best-effort is the right contract. A failed
+    * drain is printed to stderr, so a changed Spark API is seen.
     */
   def drain(sc: SparkContext): Unit =
     try {
@@ -72,5 +75,9 @@ object TaskMetricsProbe {
         .minBy(_.getParameterCount)
       if (m.getParameterCount == 0) m.invoke(bus)
       else m.invoke(bus, java.lang.Long.valueOf(2000L))
-    } catch { case _: Throwable => Thread.sleep(100) }
+    } catch {
+      case NonFatal(e) =>
+        System.err.println(s"[probe] listener bus drain failed: $e")
+        Thread.sleep(100)
+    }
 }

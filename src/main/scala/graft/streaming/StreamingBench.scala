@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 
 import scala.collection.immutable.ListMap
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -241,7 +242,7 @@ object StreamingBench {
         Attempt(-1.0, s"deadline_${DeadlineSec}s_${productive}batches", detail)
       else Attempt(-1.0, "empty_progress", detail)
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         System.err.println(s"[bench] streaming probe failed: ${e.getMessage}")
         Attempt(-1.0, s"exception:${Option(e.getMessage).getOrElse(e.getClass.getSimpleName).take(80)}",
           ListMap.empty)
